@@ -473,16 +473,19 @@ object Bench {
       // inflates, so min approximates the clean window.
       val att = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
       att += ((medianBatchSec(uniform = true), medianBatchSec(uniform = false)))
+      // a failed attempt reports -1.0; it must never win the minimum
+      def best(xs: Seq[Double]): Double =
+        xs.filter(_ > 0).minOption.getOrElse(-1.0)
       def bestPair: (Double, Double) =
-        (att.map(_._1).min, att.map(_._2).min)
-      while ({ val (u, z) = bestPair; u <= 0 || z / u > 1.3 } &&
+        (best(att.map(_._1).toSeq), best(att.map(_._2).toSeq))
+      while ({ val (u, z) = bestPair; u <= 0 || z <= 0 || z / u > 1.3 } &&
           att.size < 3) {
         att += ((medianBatchSec(uniform = true),
           medianBatchSec(uniform = false)))
       }
       val (u, z) = bestPair
       Seq("uniform_batch_sec" -> u, "zipf_batch_sec" -> z,
-        "ratio" -> (if (u > 0) z / u else -1.0),
+        "ratio" -> (if (u > 0 && z > 0) z / u else -1.0),
         "attempts" -> att.size.toDouble) ++
         att.zipWithIndex.flatMap { case ((au, az), i) =>
           Seq(s"attempt${i + 1}_uniform" -> au, s"attempt${i + 1}_zipf" -> az)

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.SessionConf
+
 /** Analytics over the crawl's edge table — the queries the reference's
   * companion services answer against its graph store (degree stats,
   * bounded-hop reachability for "path between articles" lookups).
@@ -122,21 +124,18 @@ object GraphOps {
     // adaptive iteration parallelism, same contract as the
     // connectedComponents loop: every per-iteration exchange carries
     // ≈ |edges| rows; size the fan-out to that (capped at the
-    // session's configured value, restored in finally) instead of
+    // session's configured value, scoped to the loop) instead of
     // paying full task-launch latency per exchange on small graphs
     val spark = e.sparkSession
     val confKey = "spark.sql.shuffle.partitions"
     val origPart = spark.conf.get(confKey).toInt
     val m = e.count()
-    var k = 0
-    try {
-      spark.conf.set(confKey,
-        math.max(1L, math.min(origPart.toLong, m / 50000L + 1L)).toInt)
-      while (k < iters) {
-        k += 1
+    val parts = math.max(1L, math.min(origPart.toLong, m / 50000L + 1L))
+    SessionConf.scoped(spark, confKey, parts.toString) {
+      (1 to iters).foreach { _ =>
         ranks = pageRankStep(degged, e, n, damping, ranks).localCheckpoint(true)
       }
-    } finally spark.conf.set(confKey, origPart)
+    }
     ranks.select(col("node"), col("rank"))
   }
 
@@ -196,7 +195,7 @@ object GraphOps {
     var prevSig: (Long, Long) = (-1L, -1L)
     var round = 0
     var converged = liveN == 0L
-    // Adaptive iteration parallelism (scoped, restored in finally):
+    // Adaptive iteration parallelism (scoped to each round):
     // a round is 4-5 exchanges whose row counts track the LIVE edge
     // list, which shrinks toward star-forest size — scheduling the
     // session's full shuffle-partition fan-out for every exchange of
@@ -214,27 +213,26 @@ object GraphOps {
     val origPart = spark.conf.get(confKey).toInt
     def partsFor(n: Long): Int =
       math.max(1L, math.min(origPart.toLong, n / 50000L + 1L)).toInt
-    try {
-      while (!converged && round < maxRounds) {
-        round += 1
-        spark.conf.set(confKey, partsFor(liveN))
-        // the convergence signature RIDES the checkpoint
-        // materialization as an Observation — one job per round
-        // instead of two (the separate agg job was a second pass over
-        // the round's output)
-        val obs = org.apache.spark.sql.Observation()
-        val next = ccRound(e)
+    while (!converged && round < maxRounds) {
+      round += 1
+      // the convergence signature RIDES the checkpoint
+      // materialization as an Observation — one job per round
+      // instead of two (the separate agg job was a second pass over
+      // the round's output)
+      val obs = org.apache.spark.sql.Observation()
+      val next = SessionConf.scoped(spark, confKey, partsFor(liveN).toString) {
+        ccRound(e)
           .observe(obs, count(lit(1)).as("n"),
             coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x"))
           .localCheckpoint(true)
-        val row = obs.get
-        val sig = (row("n").asInstanceOf[Long], row("x").asInstanceOf[Long])
-        converged = sig == prevSig
-        prevSig = sig
-        liveN = sig._1
-        e = next
       }
-    } finally spark.conf.set(confKey, origPart)
+      val row = obs.get
+      val sig = (row("n").asInstanceOf[Long], row("x").asInstanceOf[Long])
+      converged = sig == prevSig
+      prevSig = sig
+      liveN = sig._1
+      e = next
+    }
     require(converged || round < maxRounds,
       s"connectedComponents did not converge in $maxRounds rounds")
     // star forest: non-roots point at their root; roots + isolated

@@ -177,6 +177,61 @@ class PredicateSpec extends SparkSpec {
     assert(got.toSeq == cases, got.mkString("\n"))
   }
 
+  test("canon expressions: interpreted evaluation (the engine's path) matches codegen") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import graft.functions.canon
+    val rules = Seq("com", "co.uk", "*.ck", "!www.ck", "org")
+    val golden = Seq("/wiki/Maytag_Blue_cheese", "/wiki/ingeni%c3%b8ren",
+      "/wiki/^#$%#$G#$(JG#($JG(DFS(J#(JF%23423",
+      "https://en.wikipedia.org/wiki/Test_Page", "/synonym/perception",
+      "https://www.synonyms.com/synonym/perception",
+      "http://www.synonyms.com/synonym/Water_Fall",
+      "/synonym/ar/%D8%AD%D9%8A%D9%86", "https://synonyms.reverso.net/synonym/ar/موسم",
+      "/wiki/Albemarle_County,_Virginia", "HTTP://EN.Wikipedia.ORG:80/wiki/X#frag",
+      "https://h.test:443/a?b=2&a=1", "https://h.test", "/wiki/Rel#frag",
+      "http://h1.test:8080/x", "https://a.b.example.com/x", "http://x.site.co.uk/",
+      "https://foo.w.ck/", "https://sub.www.ck/y", "http://localhost/",
+      " https://Example.com/a b ", "\thttp://x.site.co.uk/\n", "", null)
+    // deterministic pseudo-random urls: mixed case, ports, escapes,
+    // queries and fragments on the hosts of the suffix rules above
+    val rnd = new scala.util.Random(7)
+    def pick(s: String): Char = s.charAt(rnd.nextInt(s.length))
+    val hosts = Seq("Example.COM", "a.b.example.com", "x.site.co.uk", "w.ck",
+      "www.ck", "foo.bar.zz", "en.wikipedia.org", "www.synonyms.com")
+    val random = (0 until 200).map { _ =>
+      val path = (0 until rnd.nextInt(24)).map(_ => pick("aZ09_/%+:#èح")).mkString
+      val port = if (rnd.nextBoolean()) "" else s":${pick("48")}${pick("03")}"
+      val query = if (rnd.nextBoolean()) "" else s"?b=${rnd.nextInt(9)}&a=${pick("xY")}"
+      s"${if (rnd.nextBoolean()) "http" else "HTTPS"}://${hosts(rnd.nextInt(hosts.length))}" +
+        s"$port/wiki/$path$query"
+    }
+    val corpus = (golden ++ random).zipWithIndex.toDF("url", "i")
+    val profiles = Seq(Sites.wikipedia, Sites.synonyms, Sites.synonymsAr,
+      Sites.usCounties, Sites.web)
+    // the shuffle keeps the projection out of the optimizer's local
+    // folding, so it runs where the engine's projections run
+    def rows(): (Seq[org.apache.spark.sql.Row], org.apache.spark.sql.execution.SparkPlan) = {
+      val host = canon.host_of(col("url"))
+      val df = corpus.repartition(2).select(Seq(col("i"),
+          canon.canonical_url(col("url")), host,
+          canon.reg_domain(host, rules), canon.public_suffix(host, rules)) ++
+        profiles.map(_.cleanName(col("url"))): _*)
+      (df.collect().toSeq.sortBy(_.getInt(0)), df.queryExecution.executedPlan)
+    }
+    val (interp, interpPlan) = graft.engine.SessionConf.interpreted(spark)(rows())
+    val (gen, genPlan) = rows()
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    assert(plans.collect(interpPlan) { case w: WholeStageCodegenExec => w }.isEmpty, interpPlan)
+    assert(plans.collect(interpPlan) { case p: ProjectExec => p }.nonEmpty, interpPlan)
+    assert(plans.collect(genPlan) { case w: WholeStageCodegenExec => w }
+      .exists(_.collect { case p: ProjectExec => p }.nonEmpty), genPlan)
+    assert(interp.length == golden.length + random.length)
+    assert(gen.length == interp.length)
+    val diff = interp.zip(gen).filter { case (a, b) => a != b }
+    assert(diff.isEmpty, diff.take(5).mkString("\n"))
+  }
+
   test("reg_domain composes with host_of and stays in whole-stage codegen") {
     val rules = Seq("org")
     val df = spark.range(50).select(

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
-import graft.engine.CrawlEngine
+import graft.engine.{CrawlEngine, SessionConf}
 import graft.functions.{Extract, GoUrl}
 import graft.model.CrawlConfig
 import graft.sites.{Sites, SyntheticWeb}
@@ -777,6 +777,110 @@ class EngineSpec extends SparkSpec with BeforeAndAfterAll {
       // reads are O(batch), not O(table)
       assert(last > 0 && last <= 10, s"engine ran $last actions in one batch")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("steady-state batch compiles no generated classes; the caller's codegen mode is restored") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val key = SessionConf.FactoryModeKey
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def explicitlySet: Option[String] = spark.conf.getAll.get(key)
+    val seedUrl = SyntheticWeb.pageUrl(spec, 0L)
+    val root = Files.createTempDirectory("graft-codegen").toString
+    val cfg = CrawlConfig(site = "wikipedia", batchSize = 5,
+      compactLogThreshold = 1L << 30)
+    val eng = newEngine(root, cfg)
+    eng.seed(Seq(seedUrl))
+    val before = spark.conf.getOption(key)
+    assert(eng.step().nonEmpty) // warm-up
+    val c0 = compiles
+    assert(eng.step().nonEmpty)
+    // the conf is internal to Spark: if an upgrade stops honouring it,
+    // this is the assertion that fails
+    assert(compiles - c0 == 0L, "classes compiled in a steady-state batch")
+    assert(spark.conf.getOption(key) == before)
+    assert(explicitlySet.isEmpty)
+
+    // a batch that throws restores the caller's value too — unset, or
+    // whatever the caller set
+    val failing = new CrawlEngine(spark, new Store(root, spark), profile,
+      testCfg(cfg), SyntheticWeb.pages(spark, spec).toDF(),
+      fetcher = Some(_ => throw new IllegalStateException("fetch down")))
+    assert(intercept[IllegalStateException](failing.step())
+      .getMessage == "fetch down")
+    assert(spark.conf.getOption(key) == before)
+    assert(explicitlySet.isEmpty)
+    try {
+      spark.conf.set(key, "FALLBACK")
+      intercept[IllegalStateException](failing.step())
+      assert(explicitlySet.contains("FALLBACK"))
+    } finally spark.conf.unset(key)
+  }
+
+  test("a batch planned above InterpretedMaxRows keeps the session's codegen mode") {
+    val key = SessionConf.FactoryModeKey
+    val n = CrawlEngine.InterpretedMaxRows + 1
+    val urls = SyntheticWeb.Spec("wikipedia", numPages = n + 100, seed = 7L)
+    val root = Files.createTempDirectory("graft-codegen-big").toString
+    // filters sized well past the seeds: no seed is dropped as seen
+    val cfg = CrawlConfig(site = "wikipedia", batchSize = n.toInt,
+      numShards = 8, bloomItemsPerShard = 1L << 16)
+    var modes = Seq.empty[Option[String]]
+    val probe = Some { (_: org.apache.spark.sql.DataFrame) =>
+      modes :+= spark.conf.getAll.get(key)
+      throw new IllegalStateException("probed")
+    }
+    val eng = new CrawlEngine(spark, new Store(root, spark), profile, cfg,
+      SyntheticWeb.pages(spark, spec).toDF(), fetcher = probe)
+    eng.seed((0L until n + 100).map(SyntheticWeb.pageUrl(urls, _)))
+    intercept[IllegalStateException](eng.step())
+    val small = new CrawlEngine(spark, new Store(
+      Files.createTempDirectory("graft-codegen-small").toString, spark),
+      profile, testCfg(cfg.copy(batchSize = 5)), SyntheticWeb.pages(spark, spec).toDF(),
+      fetcher = probe)
+    small.seed(Seq(SyntheticWeb.pageUrl(spec, 0L)))
+    intercept[IllegalStateException](small.step())
+    // (the key was not set by the caller: codegen, Spark's default)
+    assert(modes == Seq(None, Some("NO_CODEGEN")))
+    assert(spark.conf.getAll.get(key).isEmpty)
+  }
+
+  test("scoped conf: overlapping calls on two threads restore once, at the last exit; nested calls stack") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val key = SessionConf.FactoryModeKey
+    def current: Option[String] = spark.conf.getAll.get(key)
+    assert(current.isEmpty)
+    // A enters, B enters, A returns while B still runs, then B returns
+    val aIn, bIn, aOut = new CountDownLatch(1)
+    var seenByB: Option[String] = None
+    val b = new Thread(() => {
+      aIn.await(30, TimeUnit.SECONDS)
+      SessionConf.interpreted(spark) {
+        bIn.countDown()
+        aOut.await(30, TimeUnit.SECONDS)
+        seenByB = current
+      }
+    })
+    b.start()
+    SessionConf.interpreted(spark) {
+      aIn.countDown()
+      assert(bIn.await(30, TimeUnit.SECONDS))
+    }
+    val afterA = current
+    aOut.countDown()
+    b.join(30000)
+    assert(afterA.contains("NO_CODEGEN"), "the first call to return put the caller's value back early")
+    assert(seenByB.contains("NO_CODEGEN"))
+    assert(current.isEmpty)
+
+    val k = "graft.test.scoped"
+    spark.conf.set(k, "caller")
+    try {
+      SessionConf.scoped(spark, k, "outer") {
+        SessionConf.scoped(spark, k, "inner")(assert(spark.conf.get(k) == "inner"))
+        assert(spark.conf.get(k) == "outer")
+      }
+      assert(spark.conf.get(k) == "caller")
+    } finally spark.conf.unset(k)
   }
 
   test("id-collision guard fails the batch loudly (narrowed id space)") {
